@@ -1,5 +1,8 @@
-"""spark-submit entry point (BASELINE.md scaling protocol):
+"""spark-submit entry point (BASELINE.md scaling protocol). Build
+dist/engine.zip from the sources first (it is not tracked; the scaling
+tools rebuild it on every run):
 
+  python -c "from tools.bench_scaling import build_zip; build_zip()"
   spark-submit --master local[8] --py-files dist/engine.zip jobs/ingest.py \\
       --input /tmp/mfdedup_bench/images_50000.parquet --mode dedup \\
       --out /tmp/bench/run8

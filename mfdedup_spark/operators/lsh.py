@@ -36,10 +36,18 @@ def explode_bands(signatures: DataFrame) -> DataFrame:
     posexplode and the (space, band) pair is recovered from the position,
     where the former mh/sh union scanned the persisted signature frame
     twice (guide §2.4; the in-memory columnar cache decode of the array
-    columns was a measurable per-scan cost at bench scale)."""
-    n_mh = F.size("mh_bands")
+    columns was a measurable per-scan cost at bench scale). A null bands
+    array counts as empty, so the other space's bands of that row stay
+    (``concat`` alone would return null and drop the whole row)."""
+
+    def bands(name):
+        return F.coalesce(name, F.array().cast(signatures.schema[name].dataType))
+
+    n_mh = F.size(bands("mh_bands"))
     return signatures.select(
-        F.posexplode(F.concat("mh_bands", "sh_bands")).alias("pos", "bucket"),
+        F.posexplode(F.concat(bands("mh_bands"), bands("sh_bands"))).alias(
+            "pos", "bucket"
+        ),
         "image_id",
         n_mh.alias("_n_mh"),
     ).select(

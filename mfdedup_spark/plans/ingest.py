@@ -184,10 +184,8 @@ def ingest_version(
         cand, lsh_stats = candidate_pairs(sig, cfg.signature, pin=pins)
         pairs = _verify(cand, sig, cfg.signature)
         cpairs, cap_stats = caption_pairs(images, cfg.signature, pin=pins)
-        edges = (
-            pairs.select("image_id_a", "image_id_b")
-            .unionByName(cpairs.select("image_id_a", "image_id_b"))
-            .distinct()
+        edges = pairs.select("image_id_a", "image_id_b").unionByName(
+            cpairs.select("image_id_a", "image_id_b")
         )
         clusters = connected_components(edges, sig.select("image_id"))
         store.write_partition(

@@ -189,10 +189,14 @@ def test_streaming_out_of_order_versions(spark, tmp_path):
     assert not os.path.exists(pend) or not os.listdir(pend)
 
 
-def test_connected_components_raises_on_nonconvergence(spark):
+def test_connected_components_raises_on_nonconvergence(spark, monkeypatch):
     """A component chain longer than max_iter must raise, not silently
-    return unconverged labels (ADVICE r01)."""
+    return unconverged labels (ADVICE r01). A property of the loop path,
+    so the driver path is switched off (it always converges)."""
+    from mfdedup_spark.operators import connected_components as cc
     from mfdedup_spark.operators.connected_components import connected_components
+
+    monkeypatch.setattr(cc, "DRIVER_MAX_EDGES", 0)
 
     n = 12
     pairs = spark.createDataFrame(
@@ -650,23 +654,29 @@ def test_iterate_min_label_contracted_only():
     """VERDICT r05 next-round task 6: _iterate_min_label deliberately
     recomputes its un-checkpointed first hop inside the convergence
     count — the right trade ONLY on the KB-scale contracted graph. Pin
-    the call-site invariant: the sole caller is connected_components and
+    the call-site invariant: the sole caller is _contracted_loop and
     it passes the contracted edge set (cedges), so a refactor cannot
-    silently inherit the h1 recompute onto an E-scale input."""
+    silently inherit the h1 recompute onto an E-scale input. The check
+    reads the source, so it holds whichever path DRIVER_MAX_EDGES picks;
+    it also pins the call inside the loop path, _contracted_loop."""
     import ast
     import inspect
 
     from mfdedup_spark.operators import connected_components as cc
 
-    tree = ast.parse(inspect.getsource(cc))
-    calls = [
-        node
-        for node in ast.walk(tree)
-        if isinstance(node, ast.Call)
-        and isinstance(node.func, ast.Name)
-        and node.func.id == "_iterate_min_label"
-    ]
+    def find_calls(tree):
+        return [
+            node
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Name)
+            and node.func.id == "_iterate_min_label"
+        ]
+
+    calls = find_calls(ast.parse(inspect.getsource(cc)))
     assert len(calls) == 1, "expected exactly one _iterate_min_label call"
+    loop = ast.parse(inspect.getsource(cc._contracted_loop))
+    assert len(find_calls(loop)) == 1, "the loop path must make that call"
     first_arg = calls[0].args[0]
     assert isinstance(first_arg, ast.Name) and first_arg.id == "cedges", (
         "_iterate_min_label must be fed the CONTRACTED edge set"

@@ -114,6 +114,34 @@ def test_no_silent_drops_at_this_scale(results):
     assert out["bucket_stats"].where("dropped > 0").count() == 0
 
 
+def test_no_job_outlives_dedup_images(spark, fixture_parquet):
+    """dedup_images joins its background signature prefetch before it
+    returns: no Spark job it started is still running afterwards."""
+    import threading
+
+    path, _, _ = fixture_parquet
+    out = dedup_images(spark.read.parquet(path), CFG)
+    assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
+    assert not any(t.name == "mfdedup-prefetch" for t in threading.enumerate())
+    out["signatures"].unpersist()
+
+
+def test_explode_bands_keeps_row_with_null_bands(spark):
+    """A null bands array counts as empty: the row keeps its other
+    space's bands instead of vanishing (concat of a null is null)."""
+    from mfdedup_spark.operators.lsh import explode_bands
+
+    sig = spark.createDataFrame(
+        [("a", [11, 12], None), ("b", None, [21]), ("c", [31], [32])],
+        "image_id string, mh_bands array<bigint>, sh_bands array<bigint>",
+    )
+    got = sorted(map(tuple, explode_bands(sig).collect()))
+    assert got == [
+        ("mh", 0, 11, "a"), ("mh", 0, 31, "c"), ("mh", 1, 12, "a"),
+        ("sh", 0, 21, "b"), ("sh", 0, 32, "c"),
+    ]
+
+
 @pytest.mark.parametrize("method", ["gear", "rabin", "fixed"])
 def test_signature_parity_per_method(spark, method):
     """T2/T3 parity: Spark signatures equal the numpy oracle at each

@@ -243,33 +243,38 @@ def test_rabin_linearity_property(data):
     assert _rabin_slow(win) in {int(v) for v in got}
 
 
-def test_connected_components_random_parity(spark):
-    """Star-contraction CC (r04) vs a driver-side union-find on random
-    graphs spanning the shapes the pipeline produces: pure anchor-stars,
-    cross-bucket chains, rings (diameter stress), and isolated vertices.
-    Labels must equal the exact per-component minimum in every case."""
+def test_connected_components_random_parity(spark, monkeypatch):
+    """Both connected-components paths vs a union-find on random graphs
+    spanning the shapes the pipeline produces (pure anchor-stars,
+    cross-bucket chains, rings for diameter stress, isolated vertices)
+    and the inputs callers may pass: ids whose string order differs from
+    their numeric order (the flagship casts long doc ids to strings),
+    non-ASCII ids, no edges, endpoints missing from ``vertices``, and
+    duplicate and reversed edges. Every case runs on the driver path and
+    on the loop (``DRIVER_MAX_EDGES = 0``); labels must equal the exact
+    per-component minimum in Spark's string order on both."""
     import random
 
-    from mfdedup_spark.operators.connected_components import (
-        connected_components,
-    )
+    from mfdedup_spark.operators import connected_components as cc
 
     rng = random.Random(1234)
-    for case in range(4):
+    driver_cap = cc.DRIVER_MAX_EDGES
+    cases = []
+    for shape in range(4):
         n = 400
         ids = [f"n{i:05d}" for i in range(n)]
         edges = set()
-        if case == 0:  # anchor-stars
+        if shape == 0:  # anchor-stars
             for s in range(0, n - 20, 20):
                 for m in range(1, rng.randint(2, 12)):
                     edges.add((ids[s], ids[s + m]))
-        elif case == 1:  # stars + chains across buckets
+        elif shape == 1:  # stars + chains across buckets
             for s in range(0, n - 10, 10):
                 for m in range(1, 6):
                     edges.add((ids[s], ids[s + m]))
                 if s >= 10 and rng.random() < 0.5:
                     edges.add((ids[s - 5], ids[s + 1]))
-        elif case == 2:  # one big ring (diameter n/2) + noise edges
+        elif shape == 2:  # one big ring (diameter n/2) + noise edges
             for i in range(120):
                 edges.add((ids[i], ids[(i + 1) % 120]))
             for _ in range(50):
@@ -279,9 +284,32 @@ def test_connected_components_random_parity(spark):
             for _ in range(150):
                 a, b = rng.sample(range(n), 2)
                 edges.add((ids[min(a, b)], ids[max(a, b)]))
+        cases.append((f"shape {shape}", sorted(edges), ids))
+    # decimal strings: "10" < "9" in binary order, so {9, 10} is "10"'s
+    nums = [str(i) for i in range(1, 40)]
+    chain = [(str(i), str(i + 1)) for i in range(5, 15)]
+    cases.append(("numeric strings", chain + [("30", "4"), ("39", "30")], nums))
+    uni = ["é", "e", "ü", "z", "日本", "日", "ä", "a"]
+    cases.append(
+        ("non-ascii", [("é", "z"), ("ü", "日本"), ("日", "ü"), ("ä", "e")], uni)
+    )
+    cases.append(("no edges", [], ids))
+    # endpoints x1, x2, x3 are not vertices; vertex v2 repeats
+    cases.append(
+        (
+            "endpoints outside vertices",
+            [("v1", "x1"), ("x2", "x3"), ("x3", "v3")],
+            ["v1", "v2", "v2", "v3", "v4"],
+        )
+    )
+    dup = [("d3", "d1"), ("d1", "d3"), ("d3", "d1"), ("d2", "d3"), ("d5", "d4")]
+    cases.append(("duplicate and reversed", dup, ["d1", "d2", "d3", "d4", "d5"]))
 
-        # exact oracle: union-find, label = min id per component
-        parent = {v: v for v in ids}
+    for name, edges, verts in cases:
+        # exact oracle: union-find, label = min id per component (Python
+        # str order is code-point order, which is UTF-8 binary order)
+        parent = {v: v for e in edges for v in e}
+        parent.update((v, v) for v in verts)
 
         def find(x):
             while parent[x] != x:
@@ -293,14 +321,20 @@ def test_connected_components_random_parity(spark):
             ra, rb = find(a), find(b)
             if ra != rb:
                 parent[max(ra, rb)] = min(ra, rb)
-        want = {v: find(v) for v in ids}
+        endpoints = {v for e in edges for v in e}
+        want = sorted(
+            [(v, find(v)) for v in endpoints]
+            + [(v, v) for v in verts if v not in endpoints]
+        )
 
         pairs = spark.createDataFrame(
-            sorted(edges), ["image_id_a", "image_id_b"]
+            edges, "image_id_a string, image_id_b string"
         )
-        verts = spark.createDataFrame([(v,) for v in ids], ["image_id"])
-        got = {
-            r["image_id"]: r["cluster_id"]
-            for r in connected_components(pairs, verts, max_iter=200).collect()
-        }
-        assert got == want, f"case {case}"
+        vdf = spark.createDataFrame([(v,) for v in verts], "image_id string")
+        for cap in (driver_cap, 0):
+            monkeypatch.setattr(cc, "DRIVER_MAX_EDGES", cap)
+            got = sorted(
+                (r["image_id"], r["cluster_id"])
+                for r in cc.connected_components(pairs, vdf, max_iter=200).collect()
+            )
+            assert got == want, f"{name}, DRIVER_MAX_EDGES={cap}"
