@@ -1,11 +1,11 @@
-"""Round-6 diagnostic bench (guide §1.4): per-query noop-sink isolation,
-N in-JVM reps with per-query minima, and a phase breakdown of the
-image_dedup pipeline (signatures / candidates / verify / caption / CC).
+"""Diagnostic bench: per-query noop-sink isolation and N in-JVM reps
+with per-query minima for the six bench.py headliners. For a per-phase
+breakdown of image_dedup, use `perfbench/run.py --trace 1`, which times
+the pipeline's own steps.
 
-`bench.py` stays frozen (driver contract); this file is the measurement
-instrument for OPTIMIZATION_r06.md. Usage:
+`bench.py` stays frozen (driver contract). Usage:
 
-  python bench_extra.py [--reps 3] [--phases] [--queries q1,q2]
+  python bench_extra.py [--reps 3] [--queries q1,q2]
 """
 
 from __future__ import annotations
@@ -24,8 +24,6 @@ def force(df) -> None:
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--reps", type=int, default=3)
-    ap.add_argument("--phases", action="store_true",
-                    help="also break image_dedup into pipeline phases")
     ap.add_argument("--queries", default=None,
                     help="comma list: image_dedup,doc_cluster,ndf_classify,"
                          "restore_prefix,ngram_jaccard,ann_topk")
@@ -33,8 +31,6 @@ def main() -> int:
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
-    from pyspark.sql import functions as F
 
     from bench import ensure_image_fixture, _sf_from_dir
     from mfdedup_spark import contract
@@ -89,7 +85,7 @@ def main() -> int:
     samples: dict[str, list[float]] = {n: [] for n in names}
     for rep in range(args.reps):
         for name in names:
-            sc.setJobDescription(f"r06[{rep}] {name}")
+            sc.setJobDescription(f"bench_extra[{rep}] {name}")
             t0 = time.time()
             QUERIES[name]()
             samples[name].append(round(time.time() - t0, 3))
@@ -103,50 +99,6 @@ def main() -> int:
         "min": {n: min(v) for n, v in samples.items()},
         "min_total": round(sum(min(v) for v in samples.values()), 3),
     }
-
-    if args.phases:
-        from mfdedup_spark.operators.caption_match import caption_pairs
-        from mfdedup_spark.operators.connected_components import (
-            connected_components,
-        )
-        from mfdedup_spark.operators.lsh import candidate_pairs
-        from mfdedup_spark.operators.verify import verify_pairs
-
-        cfg = SignatureConfig()
-        phases: dict[str, list[float]] = {}
-
-        def ph(name: str, fn) -> None:
-            sc.setJobDescription(f"r06-phase {name}")
-            t0 = time.time()
-            fn()
-            phases.setdefault(name, []).append(round(time.time() - t0, 3))
-            sc.setJobDescription(None)
-
-        from mfdedup_spark.functions.signatures import compute_signatures
-
-        for _ in range(args.reps):
-            images = spark.read.parquet(img_path).repartition(cpus)
-            sig = compute_signatures(images, cfg)
-            sig.persist()
-            ph("signatures", lambda: force(sig))
-            cand, _ = candidate_pairs(sig, cfg)
-            ph("candidates", lambda: force(cand))
-            verified = verify_pairs(cand, sig, cfg)
-            ph("verify", lambda: force(verified))
-            cpairs, _ = caption_pairs(images, cfg)
-            ph("caption", lambda: force(cpairs))
-            edges = (
-                verified.unionByName(cpairs)
-                .select("image_id_a", "image_id_b")
-                .distinct()
-            )
-            ph("cc", lambda: force(
-                connected_components(edges, sig.select("image_id"))
-            ))
-            sig.unpersist()
-        result["image_dedup_phases"] = {
-            "samples": phases, "min": {n: min(v) for n, v in phases.items()}
-        }
 
     print(json.dumps(result))
     return 0

@@ -158,7 +158,6 @@ def main() -> None:
         edges = (
             verified.select("image_id_a", "image_id_b")
             .unionByName(cpairs.select("image_id_a", "image_id_b"))
-            .distinct()
         )
         clusters = connected_components(edges, sig.select("image_id"))
         clusters.write.format("noop").mode("overwrite").save()

@@ -4,14 +4,30 @@ sign-random-projection (SRP) LSH-bucketed variant as the scale path —
 bucket first, then brute-force only within buckets, turning the O(N·Q)
 scan into O(Q·bucket_width).
 
-Everything is expressed with JVM ``aggregate``/``zip_with`` folds over
-exact-decimal hyperplane constants, so DuckDB computes bit-identical
-values for the oracle twins (same trick as textops: no float
-nondeterminism because both engines fold sequentially in array order).
+Each assigner has one implementation:
+
+- SRP buckets and fixed-centroid IVF lists share one Column kernel,
+  ``_dots``: the hyperplanes (or centroids) ride as ONE flat array
+  literal, and a ``transform(sequence)`` over it folds one
+  ``aggregate(zip_with)`` dot per row of constants. The plan holds one
+  Literal node whatever the plane count, so 28 planes
+  (``recommended_planes(10**12)``) plan as fast as 6.
+- Trained IVF (k-means) assigns through a broadcast join against the
+  centroid table with ``min(struct(distance, list_id))``, as
+  ``ivf_train`` does. The flat-literal kernel wins at k=16 but loses at
+  k=256 (3.9 s against 1.8 s at sf0.01, 14.2 s against 5.9 s at sf0.1,
+  local[4] on 4 cores), so the join is the one form that is never
+  slower than the unrolled per-centroid expressions it replaced.
+
+Every fold runs in array order over exact-decimal constants, so DuckDB
+computes bit-identical values for the oracle twins (the ``*_sql``
+builders; same trick as textops: no float nondeterminism because both
+engines fold sequentially in array order).
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -42,15 +58,24 @@ def _plane(i: int) -> list[float]:
     ]
 
 
-PLANES = [_plane(i) for i in range(N_PLANES)]
+def _dots(emb: Column, consts: list[list[float]]) -> Column:
+    """array<double> of ``emb · consts[i]`` for every row i of ``consts``.
 
-
-def _dot(a: Column, consts: list[float]) -> Column:
-    arr = F.array(*[F.lit(c) for c in consts])
-    return F.aggregate(
-        F.zip_with(a, arr, lambda x, y: x.cast("double") * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
+    The constants are packed into one flat ``lit(ndarray)`` (a single
+    Literal node; a nested array-of-arrays literal measured 2–5× slower)
+    and row i is ``slice(C, i*DIM+1, DIM)``. Each dot folds in array
+    order from 0.0, exactly like ``_dot_sql``."""
+    flat = F.lit(np.asarray(consts, dtype=np.float64).ravel())
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(len(consts) - 1)),
+        lambda i: F.aggregate(
+            F.zip_with(
+                emb, F.slice(flat, i * DIM + 1, F.lit(DIM)),
+                lambda x, y: x.cast("double") * y,
+            ),
+            F.lit(0.0),
+            lambda acc, v: acc + v,
+        ),
     )
 
 
@@ -65,19 +90,22 @@ def _dot_sql(expr: str, consts: list[float]) -> str:
 
 def srp_bucket(emb: Column, n_planes: int = N_PLANES) -> Column:
     """Sign-random-projection bucket: bit i = (emb · plane_i) >= 0.
-    ``n_planes`` is the corpus-proportional knob (recommended_planes)."""
-    planes = [_plane(i) for i in range(n_planes)] if n_planes != N_PLANES else PLANES
-    out = F.lit(0).cast("long")
-    for i, p in enumerate(planes):
-        out = out + F.when(_dot(emb, p) >= 0, F.lit(1 << i)).otherwise(0)
-    return out
+    ``n_planes`` is the corpus-proportional knob (recommended_planes).
+    ``shiftleft`` takes no Column shift, so bit i is ``pow(2, i)`` (exact
+    in double up to 2^62) summed as longs."""
+    bits = F.transform(
+        _dots(emb, [_plane(i) for i in range(n_planes)]),
+        lambda d, i: F.when(d >= 0, F.pow(F.lit(2), i).cast("long")).otherwise(
+            F.lit(0).cast("long")
+        ),
+    )
+    return F.aggregate(bits, F.lit(0).cast("long"), lambda acc, b: acc + b)
 
 
 def srp_bucket_sql(expr: str, n_planes: int = N_PLANES) -> str:
-    planes = [_plane(i) for i in range(n_planes)] if n_planes != N_PLANES else PLANES
     terms = " + ".join(
-        f"case when {_dot_sql(expr, p)} >= 0 then {1 << i} else 0 end"
-        for i, p in enumerate(planes)
+        f"case when {_dot_sql(expr, _plane(i))} >= 0 then {1 << i} else 0 end"
+        for i in range(n_planes)
     )
     return f"cast({terms} as bigint)"
 
@@ -124,27 +152,21 @@ def cosine_sql(ea: str, eb: str) -> str:
     return f"({dot(ea, eb)} / (sqrt({dot(ea, ea)}) * sqrt({dot(eb, eb)})))"
 
 
-def srp_buckets(emb_df: DataFrame) -> DataFrame:
-    """embeddings → (vec_id, bucket)."""
-    return emb_df.select("vec_id", srp_bucket(F.col("embedding")).alias("bucket"))
+def _with_key(emb_df: DataFrame, key: Column) -> DataFrame:
+    """(vec_id, embedding, <key>, en): the searchable side of a top-k."""
+    return emb_df.select(
+        "vec_id", "embedding", key, vec_norm(F.col("embedding")).alias("en")
+    )
 
 
-def ann_lsh_topk(emb_df: DataFrame, n_queries: int = 10, k: int = 5) -> DataFrame:
-    """LSH-bucketed ANN: for each query, rank only same-bucket candidates.
-    Output (query_id, neighbor_id, rank, cosine). At 10^12 scale the
-    bucket join replaces the full cross product; recall is tunable via
-    N_PLANES / multi-probe."""
-    with_b = emb_df.select(
-        "vec_id", "embedding", srp_bucket(F.col("embedding")).alias("bucket"),
-        vec_norm(F.col("embedding")).alias("en"),
-    )
-    q = with_b.where(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        "bucket",
-        F.col("en").alias("qn"),
-    )
-    cand = F.broadcast(q).join(with_b, "bucket").where(
+def _ranked_neighbors(
+    probes: DataFrame, rows: DataFrame, key: str, k: int
+) -> DataFrame:
+    """Each query's top ``k`` same-``key`` neighbours by rounded cosine
+    (ties → lower neighbor id). ``probes`` is (query_id, qe, qn, key),
+    broadcast; ``rows`` is a ``_with_key`` frame. Output (query_id,
+    neighbor_id, rank, cosine)."""
+    cand = F.broadcast(probes).join(rows, key).where(
         F.col("vec_id") != F.col("query_id")
     )
     scored = cand.select(
@@ -165,6 +187,31 @@ def ann_lsh_topk(emb_df: DataFrame, n_queries: int = 10, k: int = 5) -> DataFram
     )
 
 
+def _own_key_queries(with_k: DataFrame, key: str, n_queries: int) -> DataFrame:
+    """Queries 0..n_queries-1 probing only their own ``key``."""
+    return with_k.where(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("qe"),
+        key,
+        F.col("en").alias("qn"),
+    )
+
+
+def srp_buckets(emb_df: DataFrame) -> DataFrame:
+    """embeddings → (vec_id, bucket)."""
+    return emb_df.select("vec_id", srp_bucket(F.col("embedding")).alias("bucket"))
+
+
+def ann_lsh_topk(emb_df: DataFrame, n_queries: int = 10, k: int = 5) -> DataFrame:
+    """LSH-bucketed ANN: for each query, rank only same-bucket candidates.
+    Output (query_id, neighbor_id, rank, cosine). At 10^12 scale the
+    bucket join replaces the full cross product; recall is tunable via
+    N_PLANES / multi-probe."""
+    with_b = _with_key(emb_df, srp_bucket(F.col("embedding")).alias("bucket"))
+    q = _own_key_queries(with_b, "bucket", n_queries)
+    return _ranked_neighbors(q, with_b, "bucket", k)
+
+
 # ------------------------------------------------------------------- IVF
 N_CENTROIDS = 16
 
@@ -183,11 +230,10 @@ CENTROIDS = [_centroid(i) for i in range(N_CENTROIDS)]
 
 
 def ivf_assign(emb: Column) -> Column:
-    """IVF coarse quantization: argmax centroid dot product, deterministic
-    tie-break by centroid index (greatest + coalesce(case...))."""
-    dots = [_dot(emb, c) for c in CENTROIDS]
-    best = F.greatest(*dots)
-    return F.coalesce(*[F.when(d == best, F.lit(i)) for i, d in enumerate(dots)])
+    """IVF coarse quantization: argmax centroid dot product; the first
+    maximum wins, so ties go to the lower centroid index."""
+    d = _dots(emb, CENTROIDS)
+    return F.array_position(d, F.array_max(d)) - 1
 
 
 def ivf_assign_sql(expr: str) -> str:
@@ -210,55 +256,11 @@ def ivf_lists(emb_df: DataFrame) -> DataFrame:
 def ann_ivf_topk(emb_df: DataFrame, n_queries: int = 10, k: int = 5) -> DataFrame:
     """IVF ANN: probe only the query's coarse list (nprobe=1), brute-force
     cosine within it. The scale path's other half next to SRP-LSH."""
-    with_l = emb_df.select(
-        "vec_id", "embedding", ivf_assign(F.col("embedding")).cast("int").alias("list_id"),
-        vec_norm(F.col("embedding")).alias("en"),
+    with_l = _with_key(
+        emb_df, ivf_assign(F.col("embedding")).cast("int").alias("list_id")
     )
-    q = with_l.where(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe"),
-        "list_id", F.col("en").alias("qn"),
-    )
-    cand = F.broadcast(q).join(with_l, "list_id").where(
-        F.col("vec_id") != F.col("query_id")
-    )
-    scored = cand.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.round(
-            cosine_with_norms(
-                F.col("qe"), F.col("embedding"), F.col("qn"), F.col("en")
-            ),
-            6,
-        ).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
-
-
-#: beyond this plane count the unrolled when-chain expression assigner
-#: bloats the plan linearly (and OOMs Catalyst well before 28 planes at
-#: IVF scale) — the broadcast-join assigner takes over (VERDICT r03 #6)
-JOINED_PATH_MIN_PLANES = 8
-
-
-def _srp_bucket_frame(
-    emb_df: DataFrame, n_planes: int, force: str | None = None
-) -> DataFrame:
-    """(vec_id, bucket) via the expression assigner for small plane
-    counts, the broadcast-join assigner past JOINED_PATH_MIN_PLANES —
-    bit-exact either way (test_embedding_capped_planes_parity)."""
-    use_join = n_planes > JOINED_PATH_MIN_PLANES if force is None else (
-        force == "join"
-    )
-    if use_join:
-        return srp_buckets_joined(emb_df, n_planes).select("vec_id", "bucket")
-    return emb_df.select(
-        "vec_id", srp_bucket(F.col("embedding"), n_planes).alias("bucket")
-    )
+    q = _own_key_queries(with_l, "list_id", n_queries)
+    return _ranked_neighbors(q, with_l, "list_id", k)
 
 
 def embedding_neardup_pairs_capped(
@@ -273,12 +275,14 @@ def embedding_neardup_pairs_capped(
     (no embedding payloads in the pair shuffle), embeddings join back once
     per side for the cosine verification. The uncapped
     embedding_neardup_pairs stays as the oracle-exact twin
-    (VERDICT r01 wrong #5). ``n_planes`` is the corpus-proportional knob;
-    past JOINED_PATH_MIN_PLANES the bucket assignment rides the
-    broadcast-join path automatically."""
+    (VERDICT r01 wrong #5). ``n_planes`` is the corpus-proportional knob
+    (recommended_planes); the bucket kernel's plan does not grow with it."""
     from mfdedup_spark.operators.lsh import capped_pairs
 
-    buckets = _srp_bucket_frame(emb_df, n_planes or N_PLANES)
+    buckets = emb_df.select(
+        "vec_id",
+        srp_bucket(F.col("embedding"), n_planes or N_PLANES).alias("bucket"),
+    )
     pairs, stats = capped_pairs(
         buckets, cap, salt, key_cols=("bucket",), id_col="vec_id"
     )
@@ -306,29 +310,6 @@ def embedding_neardup_pairs_capped(
         .where(F.col("cosine") >= threshold)
     )
     return verified, stats
-
-
-def embedding_neardup_auto(
-    emb_df: DataFrame,
-    threshold: float = 0.95,
-    cap: int = 4,
-    salt: int = 4,
-    n_rows: int | None = None,
-) -> tuple[DataFrame, DataFrame, int]:
-    """Production entry for embedding near-dup at any corpus size: sizes
-    the SRP width corpus-proportionally (recommended_planes) and routes
-    bucket assignment through the broadcast-join path once past the
-    expression assigner's plan-size limit (VERDICT r03 #6 — the pipeline
-    no longer defaults to the sf-sized 6-plane assigner at scale).
-    Returns (pairs, drop_log, n_planes). Pass ``n_rows`` when the count
-    is already known to skip the sizing job."""
-    if n_rows is None:
-        n_rows = emb_df.count()
-    planes = recommended_planes(n_rows)
-    pairs, stats = embedding_neardup_pairs_capped(
-        emb_df, threshold, cap, salt, n_planes=planes
-    )
-    return pairs, stats, planes
 
 
 def embedding_neardup_pairs(emb_df: DataFrame, threshold: float = 0.95) -> DataFrame:
@@ -387,12 +368,42 @@ def quantize_sql(expr: str) -> str:
     )
 
 
-def _sq_dist(qv: Column, consts: list[int]) -> Column:
-    arr = F.array(*[F.lit(int(c)).cast("long") for c in consts])
+def _centroids_df(spark, centroids: list[list[int]]) -> DataFrame:
+    """Trained centroids (quantized ints) → broadcastable (list_id, cv)."""
+    return spark.createDataFrame(
+        [(i, [int(x) for x in c]) for i, c in enumerate(centroids)],
+        "list_id int, cv array<bigint>",
+    )
+
+
+def _sq_dist() -> Column:
+    """Squared int64 L2 distance between the ``qv`` and ``cv`` columns."""
     return F.aggregate(
-        F.zip_with(qv, arr, lambda a, b: (a - b) * (a - b)),
+        F.zip_with(F.col("qv"), F.col("cv"), lambda a, b: (a - b) * (a - b)),
         F.lit(0).cast("long"),
         lambda acc, v: acc + v,
+    )
+
+
+def _assign_qv_joined(qdf: DataFrame, centroids: list[list[int]]) -> DataFrame:
+    """(vec_id, qv) → (vec_id, qv, list_id): nearest centroid via a
+    broadcast join against the k-row centroid table + min(struct):
+    struct ordering = (distance, list_id) gives the deterministic
+    lower-id tie-break, and the partial min combines map-side, so the
+    shuffle carries one row per vec per partition. The plan does not grow
+    with k. A null distance (null vector) yields a null list_id, not
+    list 0."""
+    cdf = _centroids_df(qdf.sparkSession, centroids)
+    d = F.col("d")
+    return (
+        qdf.crossJoin(F.broadcast(cdf))
+        .select("vec_id", "qv", "list_id", _sq_dist().alias("d"))
+        .groupBy("vec_id")
+        .agg(
+            F.min(F.when(d.isNotNull(), F.struct(d, "list_id"))).alias("m"),
+            F.first("qv").alias("qv"),
+        )
+        .select("vec_id", "qv", F.col("m.list_id").alias("list_id"))
     )
 
 
@@ -425,10 +436,6 @@ def ivf_train(emb_df: DataFrame, k: int = 16, lloyd_iters: int = 1) -> list[list
     centroids = [list(r["qv"]) for r in seed_rows]
 
     for _ in range(lloyd_iters):
-        # assignment via the broadcast-join path: training must work at
-        # k≫16 where the unrolled expression assigner blows up plan
-        # analysis (VERDICT r02 wrong #5); the integer arithmetic is
-        # identical, so the k=16 DuckDB oracle replay is unaffected
         assigned = _assign_qv_joined(q, centroids).select("qv", "list_id")
         means = (
             assigned.select("list_id", F.posexplode("qv").alias("j", "val"))
@@ -451,19 +458,11 @@ def ivf_train(emb_df: DataFrame, k: int = 16, lloyd_iters: int = 1) -> list[list
     return centroids
 
 
-def _nearest_centroid(qv: Column, centroids: list[list[int]]) -> Column:
-    """argmin over squared int distances, ties → lower centroid index."""
-    dists = [_sq_dist(qv, c) for c in centroids]
-    best = F.least(*dists)
-    return F.coalesce(
-        *[F.when(d == best, F.lit(i)) for i, d in enumerate(dists)]
-    ).cast("int")
-
-
 def ivf_lists_trained(
     emb_df: DataFrame, k: int = 16, centroids: list[list[int]] | None = None
 ) -> DataFrame:
-    """embeddings → (vec_id, list_id) under trained centroids.
+    """embeddings → (vec_id, list_id) under trained centroids (one row per
+    distinct vec_id).
 
     ``centroids``: pass the ivf_train result to reuse one training run
     across ivf_lists_trained AND ann_ivf_topk_trained in the same job
@@ -471,10 +470,8 @@ def ivf_lists_trained(
     scans); None keeps the self-training convenience for the contract."""
     if centroids is None:
         centroids = ivf_train(emb_df, k)
-    return emb_df.select(
-        "vec_id",
-        _nearest_centroid(quantize(F.col("embedding")), centroids).alias("list_id"),
-    )
+    q = emb_df.select("vec_id", quantize(F.col("embedding")).alias("qv"))
+    return _assign_qv_joined(q, centroids).select("vec_id", "list_id")
 
 
 def ann_ivf_topk_trained(
@@ -487,170 +484,17 @@ def ann_ivf_topk_trained(
 ) -> DataFrame:
     """IVF ANN over trained centroids with multi-list probing: each query
     searches its ``nprobe`` nearest lists (ranked by centroid distance,
-    ties → lower list id), brute-force cosine within the probed lists.
+    ties → lower list id, through the same broadcast centroid table as
+    the list assignment), brute-force cosine within the probed lists.
     Output (query_id, neighbor_id, rank, cosine). Pass a precomputed
     ``centroids`` (ivf_train) to train once per job."""
     if centroids is None:
         centroids = ivf_train(emb_df, k)
-    with_l = emb_df.select(
-        "vec_id",
-        "embedding",
-        _nearest_centroid(quantize(F.col("embedding")), centroids).alias("list_id"),
-        vec_norm(F.col("embedding")).alias("en"),
-    )
-    qv = quantize(F.col("embedding"))
-    dist_structs = F.array(
-        *[
-            F.struct(
-                _sq_dist(qv, c).alias("d"), F.lit(i).cast("int").alias("list_id")
-            )
-            for i, c in enumerate(centroids)
-        ]
-    )
-    probes = (
-        emb_df.where(F.col("vec_id") < n_queries)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qe"),
-            vec_norm(F.col("embedding")).alias("qn"),
-            F.explode(
-                F.slice(F.array_sort(dist_structs), 1, nprobe)
-            ).alias("probe"),
-        )
-        .select("query_id", "qe", "qn", F.col("probe.list_id").alias("list_id"))
-    )
-    cand = F.broadcast(probes).join(with_l, "list_id").where(
-        F.col("vec_id") != F.col("query_id")
-    )
-    scored = cand.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.round(
-            cosine_with_norms(
-                F.col("qe"), F.col("embedding"), F.col("qn"), F.col("en")
-            ),
-            6,
-        ).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= topk)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
-
-
-# ---------------------------------------------- broadcast-join scale path
-# The expression-path assigners above compile every centroid/hyperplane
-# into the plan as an array literal + one aggregate(zip_with(...)) fold —
-# ideal for the contract's k=16/planes≤8 (DuckDB replays it verbatim) but
-# Catalyst cannot compile 10^6 unrolled folds (VERDICT r02 wrong #5). The
-# joined variants below carry the SAME constants as a broadcast DataFrame
-# instead: per-row cost is one fold per broadcast ROW and the plan size is
-# O(1) in k / n_planes, so the module's stated scale knobs
-# (recommended_planes(10^12)→28, k~10^6 lists) are mechanically reachable.
-# Argmin/argmax is a partial-aggregable min/max(struct(...)) — map-side
-# combine shrinks the shuffle to one row per vec per partition. Parity
-# with the expression path is bit-exact (same constants, same sequential
-# fold order) — tests/test_extras.py::test_ann_join_path_parity.
-
-
-def _centroids_df(spark, centroids: list[list[int]]) -> DataFrame:
-    """Trained centroids (quantized ints) → broadcastable (list_id, cv)."""
-    return spark.createDataFrame(
-        [(i, [int(x) for x in c]) for i, c in enumerate(centroids)],
-        "list_id int, cv array<bigint>",
-    )
-
-
-def _assign_qv_joined(qdf: DataFrame, centroids: list[list[int]]) -> DataFrame:
-    """(vec_id, qv) → (vec_id, qv, list_id) via broadcast join +
-    min(struct): struct ordering = (distance, list_id) gives the
-    deterministic lower-id tie-break, exactly _nearest_centroid's
-    least+coalesce order."""
-    cdf = _centroids_df(qdf.sparkSession, centroids)
-    d = F.aggregate(
-        F.zip_with(F.col("qv"), F.col("cv"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    return (
-        qdf.crossJoin(F.broadcast(cdf))
-        .select("vec_id", "qv", "list_id", d.alias("d"))
-        .groupBy("vec_id")
-        .agg(
-            F.min(F.struct("d", "list_id")).alias("m"),
-            F.first("qv").alias("qv"),
-        )
-        .select("vec_id", "qv", F.col("m.list_id").alias("list_id"))
-    )
-
-
-def ivf_lists_joined(
-    emb_df: DataFrame, centroids: list[list[int]]
-) -> DataFrame:
-    """embeddings → (vec_id, list_id) via broadcast join + min(struct):
-    the k≫16 production twin of ivf_lists_trained (identical output)."""
-    q = emb_df.select("vec_id", quantize(F.col("embedding")).alias("qv"))
-    return _assign_qv_joined(q, centroids).select("vec_id", "list_id")
-
-
-def _planes_df(spark, n_planes: int) -> DataFrame:
-    """Hyperplanes → broadcastable (weight=2^i, pv); weights precomputed
-    so the bucket fold is a plain conditional sum."""
-    return spark.createDataFrame(
-        [(i, 1 << i, _plane(i)) for i in range(n_planes)],
-        "plane_id int, weight long, pv array<double>",
-    )
-
-
-def srp_buckets_joined(emb_df: DataFrame, n_planes: int = N_PLANES) -> DataFrame:
-    """embeddings → (vec_id, bucket) via broadcast join + conditional sum:
-    the 28-planes-and-beyond production twin of srp_buckets (identical
-    output — same double constants, same sequential zip_with fold)."""
-    pdf = _planes_df(emb_df.sparkSession, n_planes)
-    dot = F.aggregate(
-        F.zip_with(F.col("embedding"), F.col("pv"), lambda x, y: x.cast("double") * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    return (
-        emb_df.select("vec_id", "embedding")
-        .crossJoin(F.broadcast(pdf))
-        .select("vec_id", "weight", dot.alias("dot"))
-        .groupBy("vec_id")
-        .agg(
-            F.sum(
-                F.when(F.col("dot") >= 0, F.col("weight")).otherwise(F.lit(0))
-            ).cast("long").alias("bucket")
-        )
-    )
-
-
-def ann_ivf_topk_joined(
-    emb_df: DataFrame,
-    centroids: list[list[int]],
-    n_queries: int = 10,
-    topk: int = 5,
-    nprobe: int = 2,
-) -> DataFrame:
-    """Trained-IVF ANN entirely on the broadcast-join path: list
-    assignment AND per-query probe selection (rank centroids by distance,
-    keep nprobe) use the broadcast centroids DataFrame, so the plan holds
-    at k≫16 where ann_ivf_topk_trained's k-struct probe array would not
-    compile. Output identical to ann_ivf_topk_trained
-    (test_ann_ivf_joined_parity)."""
-    cdf = _centroids_df(emb_df.sparkSession, centroids)
-    with_l = ivf_lists_joined(emb_df, centroids).join(
+    with_l = ivf_lists_trained(emb_df, centroids=centroids).join(
         emb_df.select(
             "vec_id", "embedding", vec_norm(F.col("embedding")).alias("en")
         ),
         "vec_id",
-    )
-    d = F.aggregate(
-        F.zip_with(F.col("qv"), F.col("cv"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
     )
     wq = Window.partitionBy("query_id").orderBy("d", "list_id")
     probes = (
@@ -661,31 +505,13 @@ def ann_ivf_topk_joined(
             vec_norm(F.col("embedding")).alias("qn"),
             quantize(F.col("embedding")).alias("qv"),
         )
-        .crossJoin(F.broadcast(cdf))
-        .select("query_id", "qe", "qn", "list_id", d.alias("d"))
+        .crossJoin(F.broadcast(_centroids_df(emb_df.sparkSession, centroids)))
+        .select("query_id", "qe", "qn", "list_id", _sq_dist().alias("d"))
         .withColumn("pr", F.row_number().over(wq))
         .where(F.col("pr") <= nprobe)
         .select("query_id", "qe", "qn", "list_id")
     )
-    cand = F.broadcast(probes).join(with_l, "list_id").where(
-        F.col("vec_id") != F.col("query_id")
-    )
-    scored = cand.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.round(
-            cosine_with_norms(
-                F.col("qe"), F.col("embedding"), F.col("qn"), F.col("en")
-            ),
-            6,
-        ).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= topk)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return _ranked_neighbors(probes, with_l, "list_id", topk)
 
 
 # --------------------------------------------------------- multi-probe SRP
@@ -701,9 +527,8 @@ def ann_lsh_topk_multiprobe(
     (recommended_planes) without losing the neighbors that land one
     plane-flip away. Probe buckets are distinct, so no candidate dedup
     shuffle is needed."""
-    with_b = emb_df.select(
-        "vec_id", "embedding", srp_bucket(F.col("embedding"), n_planes).alias("bucket"),
-        vec_norm(F.col("embedding")).alias("en"),
+    with_b = _with_key(
+        emb_df, srp_bucket(F.col("embedding"), n_planes).alias("bucket")
     )
     probes = (
         with_b.where(F.col("vec_id") < n_queries)
@@ -722,22 +547,4 @@ def ann_lsh_topk_multiprobe(
             ).alias("bucket"),
         )
     )
-    cand = F.broadcast(probes).join(with_b, "bucket").where(
-        F.col("vec_id") != F.col("query_id")
-    )
-    scored = cand.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.round(
-            cosine_with_norms(
-                F.col("qe"), F.col("embedding"), F.col("qn"), F.col("en")
-            ),
-            6,
-        ).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return _ranked_neighbors(probes, with_b, "bucket", k)

@@ -460,11 +460,10 @@ def q_embedding_neardup_capped(spark, sf_dir):
 
 
 def q_embedding_neardup_planes12(spark, sf_dir):
-    """The corpus-proportional production route (VERDICT r03 #6): 12
-    planes exceed JOINED_PATH_MIN_PLANES, so bucket assignment rides the
-    broadcast-join assigner — oracle-checked hash-exact against the same
-    unrolled SRP SQL at 12 planes (threshold 0.1: finer buckets thin the
-    near-orthogonal co-bucket pairs; 0.2 would leave too few rows)."""
+    """The corpus-proportional production route (VERDICT r03 #6) at 12
+    planes — oracle-checked hash-exact against the unrolled SRP SQL at 12
+    planes (threshold 0.1: finer buckets thin the near-orthogonal
+    co-bucket pairs; 0.2 would leave too few rows)."""
     from mfdedup_spark import annops
 
     return annops.embedding_neardup_pairs_capped(

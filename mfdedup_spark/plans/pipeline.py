@@ -26,7 +26,7 @@ as one Spark job:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mfdedup_spark.config import SignatureConfig
@@ -105,8 +105,3 @@ def dedup_images(
         "clusters": clusters,
         "metrics": metrics,
     }
-
-
-def load_images(spark: SparkSession, path: str) -> DataFrame:
-    """Read an images table (parquet dir or file)."""
-    return spark.read.parquet(path)

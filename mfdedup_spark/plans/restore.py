@@ -68,8 +68,7 @@ PREFIX_SHARD = 65536
 #: inside executor memory). Below the cap restore performs ZERO payload
 #: exchanges — the exact analogue of the reference's per-node in-memory
 #: restoreMap (RestoreParserPipeline.h:128-137); above it the plan falls
-#: back to the fp-keyed shuffle join (the 100-TB-safe path, same
-#: corpus-proportional routing idea as annops.embedding_neardup_auto)
+#: back to the fp-keyed shuffle join (the 100-TB-safe path)
 BROADCAST_RECIPES_MAX_ROWS = 4_000_000
 
 #: byte budget for the broadcast route (ADVICE r05 medium: the row cap
@@ -247,7 +246,10 @@ def _scanned_bytes_from_lineage(
     pyarrow read, no Spark job — the metadata class the manifest reader
     already loads). Returns (scanned_bytes, scanned_bytes_pruned), or
     None when any scanned partition lacks lineage coverage (then the
-    caller recomputes from the pool — recovery windows only).
+    caller recomputes from the pool — recovery windows only). A partition
+    whose latest lineage row is not ``committed`` (say, a stale
+    ``dropped`` row with 0 bytes) counts as uncovered, so it cannot be
+    miscounted.
 
     Pruning credit without touching data: a chunk_store category serial
     c = x(x-1)/2 + y stores chunks with first_version == y exactly
@@ -259,7 +261,10 @@ def _scanned_bytes_from_lineage(
     if rows is None or len(rows) == 0:
         return None
     ids = rows["partition_id"].tolist()
-    nbytes = [int(b) for b in rows["bytes"].tolist()]
+    nbytes = [
+        int(b) if s == "committed" else None
+        for b, s in zip(rows["bytes"].tolist(), rows["state"].tolist())
+    ]
     by_exact = dict(zip(ids, nbytes))
     scanned = pruned = 0
     for part in scanned_parts:
@@ -279,7 +284,7 @@ def _scanned_bytes_from_lineage(
                 for pid, b in zip(ids, nbytes)
                 if pid.startswith(part + "/")
             ]
-            if not sub:
+            if not sub or any(b is None for _, b in sub):
                 return None
             for pid, b in sub:
                 scanned += b

@@ -1,70 +1,13 @@
-"""Tests for the training-data-pipeline extras: multimodal plumbing,
-ANN / embedding dedup, text ops, and structured streaming."""
+"""Tests for the training-data-pipeline extras: ANN / embedding dedup,
+text ops, and structured streaming."""
 
 import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from mfdedup_spark import annops, multimodal, textops
-from mfdedup_spark.core import codecs
+from mfdedup_spark import annops, textops
 from mfdedup_spark.fixtures import generate_images, write_parquet
-
-
-@pytest.fixture(scope="module")
-def images_df(spark, tmp_path_factory):
-    df, _ = generate_images(60, seed=11)
-    p = tmp_path_factory.mktemp("mm") / "images.parquet"
-    write_parquet(df, str(p))
-    return spark.read.parquet(str(p))
-
-
-def test_resize_images(spark, images_df):
-    out = multimodal.resize_images(images_df, 16, 16).toPandas()
-    assert len(out) == 60
-    assert (out["w"] == 16).all() and (out["h"] == 16).all()
-    r = out.iloc[0]
-    px = codecs.decode(bytes(r["bytes"]), 16, 16, r["fmt"])
-    assert px.shape == (16, 16)
-
-
-def test_image_features(spark, images_df):
-    out = multimodal.image_features(images_df).toPandas()
-    assert len(out) == 60
-    assert out["std_px"].gt(0).any()
-    assert out["phash"].nunique() > 30
-
-
-def test_video_frame_sampling(spark):
-    rng = np.random.default_rng(3)
-    vids = []
-    for i in range(4):
-        frames = rng.integers(0, 256, (30, 8, 8), dtype=np.uint8)
-        vids.append((f"vid{i}", multimodal.encode_rawframes(frames, fps=10), "rawframes"))
-    df = spark.createDataFrame(vids, "video_id string, bytes binary, container string")
-    out = multimodal.decode_video_frames(df, every_nth=10).toPandas()
-    assert len(out) == 4 * 3  # frames 0, 10, 20
-    assert set(out["frame_idx"]) == {0, 10, 20}
-    assert (out["ts_ms"] == out["frame_idx"] * 100).all()
-    # unsupported container raises with the missing dependency named
-    bad = spark.createDataFrame(
-        [("v", b"\x00" * 32, "mp4")], "video_id string, bytes binary, container string"
-    )
-    with pytest.raises(Exception, match="pyav|ffmpeg|NotImplemented"):
-        multimodal.decode_video_frames(bad).collect()
-
-
-def test_audio_segments(spark):
-    sr = 1000
-    tone = (np.sin(np.arange(3 * sr) * 0.3) * 10000).astype(np.int16)
-    df = spark.createDataFrame(
-        [("a0", multimodal.encode_pcm16(tone, sr), "pcm16")],
-        "audio_id string, bytes binary, codec string",
-    )
-    out = multimodal.audio_segment_features(df, segment_ms=1000).toPandas()
-    assert len(out) == 3
-    assert (out["rms"] > 1000).all()
-    assert (out["zero_crossings"] > 10).all()
 
 
 def test_ann_lsh_subset_of_bruteforce(spark):
@@ -287,86 +230,78 @@ def test_ann_trained_recall(spark):
     assert r_multi >= 0.9, r_multi
 
 
-def test_ann_join_path_parity(spark):
-    """The broadcast-join assigners (plan size O(1) in k / n_planes) must
-    match the unrolled expression-path assigners bit-exactly at the
-    contract's knobs, and must actually run at the scale knobs the module
-    advertises (k=256 trained lists, 28 SRP planes) where the expression
-    path would unroll thousands of folds into one plan (VERDICT r02
-    wrong #5)."""
+def test_ann_assigners_match_reference(spark):
+    """Each surviving assigner against an independent reference over the
+    same parquet: SRP buckets (flat-literal kernel) against DuckDB running
+    srp_bucket_sql at 6, 12 and 28 planes; trained-IVF lists (broadcast
+    join) against a numpy int64 argmin over the same centroids, first
+    index on ties, at k=16 and k=256; the capped near-dup path at 12
+    planes against its DuckDB oracle; and trained top-k runs at k=256."""
+    import duckdb
+
     from mfdedup_spark.annops import (
-        ivf_lists_joined,
+        QUANT,
+        ann_ivf_topk_trained,
+        embedding_neardup_pairs_capped,
         ivf_lists_trained,
         ivf_train,
         recommended_planes,
-        srp_buckets,
-        srp_buckets_joined,
+        srp_bucket,
+        srp_bucket_sql,
     )
+    from mfdedup_spark.contract import _embedding_neardup_capped_sql
+    from tests.test_contract import SF
 
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    path = f"{SF}/embeddings.parquet"
+    emb = spark.read.parquet(path)
+    con = duckdb.connect()
+    con.sql(f"create view embeddings as select * from '{path}'")
 
-    # --- bit-exact parity at the contract knobs (k=16, planes=6)
-    cent16 = ivf_train(emb, k=16)
-    expr = {r["vec_id"]: r["list_id"] for r in ivf_lists_trained(emb, centroids=cent16).collect()}
-    join = {r["vec_id"]: r["list_id"] for r in ivf_lists_joined(emb, cent16).collect()}
-    assert expr == join
-    b_expr = {r["vec_id"]: r["bucket"] for r in srp_buckets(emb).collect()}
-    b_join = {r["vec_id"]: r["bucket"] for r in srp_buckets_joined(emb).collect()}
-    assert b_expr == b_join
+    assert recommended_planes(10**12) == 28
+    for n in (6, 12, 28):
+        got = {
+            r["vec_id"]: r["bucket"]
+            for r in emb.select(
+                "vec_id", srp_bucket(F.col("embedding"), n).alias("bucket")
+            ).collect()
+        }
+        want = dict(
+            con.sql(
+                f"select vec_id, {srp_bucket_sql('embedding', n)} from embeddings"
+            ).fetchall()
+        )
+        assert got == want, f"{n} planes"
+        assert len(set(got.values())) > 1
 
-    # --- the advertised scale knobs run through the join path
-    n = emb.count()
-    cent256 = ivf_train(emb, k=256)
-    big = ivf_lists_joined(emb, cent256).collect()
-    assert len(big) == n
-    assert all(0 <= r["list_id"] < 256 for r in big)
-    planes28 = recommended_planes(10**12)
-    assert planes28 >= 28
-    buckets = srp_buckets_joined(emb, planes28).collect()
-    assert len(buckets) == n
-    assert all(0 <= r["bucket"] < (1 << planes28) for r in buckets)
-
-
-def test_embedding_capped_planes_parity(spark):
-    """VERDICT r03 #6: the production near-dup path threads the
-    corpus-proportional plane count — at planes=12 the joined-assigner
-    route must produce pairs AND drop-log bit-identical to the forced
-    expression route, and the auto entry must pick ≥ the default width
-    and route past the expression limit at web scale."""
-    from mfdedup_spark.annops import (
-        JOINED_PATH_MIN_PLANES,
-        N_PLANES,
-        _srp_bucket_frame,
-        embedding_neardup_auto,
-        embedding_neardup_pairs_capped,
-        recommended_planes,
+    pdf = emb.toPandas()
+    qv = np.floor(
+        np.stack(pdf["embedding"].to_numpy()).astype(np.float64) * QUANT + 0.5
+    ).astype(np.int64)
+    for k in (16, 256):
+        cent = ivf_train(emb, k=k)
+        c = np.asarray(cent, dtype=np.int64)
+        d = ((qv[:, None, :] - c[None, :, :]) ** 2).sum(axis=2)
+        want = dict(zip(pdf["vec_id"].tolist(), d.argmin(axis=1).tolist()))
+        got = {
+            r["vec_id"]: r["list_id"]
+            for r in ivf_lists_trained(emb, centroids=cent).collect()
+        }
+        assert got == want, f"k={k}"
+    null_vec = spark.createDataFrame(
+        [(-1, None)], "vec_id long, embedding array<float>"
     )
-    from mfdedup_spark.operators.lsh import capped_pairs
+    assert ivf_lists_trained(null_vec, centroids=cent).first()["list_id"] is None
 
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    big = ann_ivf_topk_trained(
+        emb, n_queries=5, topk=3, centroids=cent
+    ).collect()
+    assert big and {r["query_id"] for r in big} <= set(range(5))
+    assert all(1 <= r["rank"] <= 3 for r in big)
 
-    def run(force):
-        buckets = _srp_bucket_frame(emb, 12, force=force)
-        pairs, stats = capped_pairs(
-            buckets, 4, 4, key_cols=("bucket",), id_col="vec_id"
-        )
-        return (
-            sorted(map(tuple, pairs.collect())),
-            sorted(map(tuple, stats.collect())),
-        )
-
-    assert 12 > JOINED_PATH_MIN_PLANES  # 12 exercises the joined route
-    assert run("join") == run("expr")
-
-    # the production capped path executes end-to-end on the joined route
-    pairs12, log12 = embedding_neardup_pairs_capped(emb, 0.9, n_planes=12)
-    assert pairs12.count() >= 0 and log12.count() >= 0
-
-    # auto entry: corpus-proportional width, joined route at web scale
-    pairs_a, stats_a, planes_a = embedding_neardup_auto(emb, 0.9)
-    assert planes_a >= N_PLANES
-    assert pairs_a.count() >= 0  # plan executes end-to-end
-    assert recommended_planes(10**12) > JOINED_PATH_MIN_PLANES
+    pairs, _ = embedding_neardup_pairs_capped(emb, 0.1, n_planes=12)
+    got = sorted(map(tuple, pairs.collect()))
+    want = sorted(con.sql(_embedding_neardup_capped_sql(12, 0.1)).fetchall())
+    assert got and got == want
 
 
 def test_ivf_train_once_api(spark):
@@ -436,27 +371,6 @@ def test_cdc_chunks_empty_doc(spark):
     fixed = textops.doc_fixed_chunks(docs).toPandas()
     # fixed chunking keeps its one-empty-chunk convention in BOTH engines
     assert set(fixed["doc_id"]) == {1, 2}
-
-
-def test_ann_ivf_joined_parity(spark):
-    """The all-join IVF top-k (assignment + probe selection via broadcast
-    centroids) reproduces ann_ivf_topk_trained exactly at the contract
-    knobs and runs at k=256."""
-    from mfdedup_spark.annops import (
-        ann_ivf_topk_joined,
-        ann_ivf_topk_trained,
-        ivf_train,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    cent = ivf_train(emb, k=16)
-    want = sorted(map(tuple, ann_ivf_topk_trained(emb, centroids=cent).collect()))
-    got = sorted(map(tuple, ann_ivf_topk_joined(emb, cent).collect()))
-    assert got == want
-    cent256 = ivf_train(emb, k=256)
-    big = ann_ivf_topk_joined(emb, cent256, n_queries=5, topk=3).collect()
-    assert {r["query_id"] for r in big} <= set(range(5))
-    assert all(1 <= r["rank"] <= 3 for r in big)
 
 
 def test_stateful_streaming_classify(spark, tmp_path):

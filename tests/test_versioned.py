@@ -725,6 +725,39 @@ def test_restore_stats_lineage_parity(ingested):
         )
 
 
+def test_restore_stale_lineage_row_falls_back(ingested, tmp_path):
+    """A scanned partition whose latest lineage row is a stale ``dropped``
+    row (0 bytes) must not be counted from lineage: the bounds read
+    returns None and restore recomputes them from the pool."""
+    import shutil
+
+    from mfdedup_spark.plans.restore import (
+        _scanned_bytes_from_lineage,
+        chunk_pool,
+    )
+
+    store, _, _ = ingested
+    v = 3
+    _, scanned_parts, _, _ = chunk_pool(store, v)
+    want = _scanned_bytes_from_lineage(store, scanned_parts, v)
+    assert want is not None
+
+    copy = DedupStore(store.spark, str(tmp_path / "wh"))
+    shutil.copytree(store.root, copy.root, dirs_exist_ok=True)
+    part = scanned_parts[0]
+    pid = next(
+        p for p in copy.read_lineage_rows()["partition_id"]
+        if p == part or p.startswith(part + "/")
+    )
+    copy.append_lineage(
+        [{"partition_id": pid, "version": v, "rows": 0, "bytes": 0,
+          "state": "dropped"}]
+    )
+    assert _scanned_bytes_from_lineage(copy, scanned_parts, v) is None
+    _, stats = restore_version(copy, v)
+    assert (stats["scanned_bytes"], stats["scanned_bytes_pruned"]) == want
+
+
 def test_restore_prepayload_job_count(ingested):
     """r06 (VERDICT r05 next-round task 3): restore_version issues at
     most 2 Spark jobs before the caller materializes the payload join —
