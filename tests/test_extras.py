@@ -230,32 +230,37 @@ def test_ann_trained_recall(spark):
     assert r_multi >= 0.9, r_multi
 
 
-def test_ann_assigners_match_reference(spark):
-    """Each surviving assigner against an independent reference over the
-    same parquet: SRP buckets (flat-literal kernel) against DuckDB running
-    srp_bucket_sql at 6, 12 and 28 planes; trained-IVF lists (broadcast
-    join) against a numpy int64 argmin over the same centroids, first
-    index on ties, at k=16 and k=256; the capped near-dup path at 12
-    planes against its DuckDB oracle; and trained top-k runs at k=256."""
+@pytest.fixture(scope="module")
+def emb_duck():
+    """DuckDB over the same embeddings parquet the Spark tests read."""
     import duckdb
 
+    from tests.test_contract import SF
+
+    path = f"{SF}/embeddings.parquet"
+    con = duckdb.connect()
+    con.sql(f"create view embeddings as select * from '{path}'")
+    return path, con
+
+
+def test_ann_join_path_parity(spark, emb_duck):
+    """The assigners against independent references over the same
+    parquet: SRP buckets (flat-literal kernel) against DuckDB running
+    srp_bucket_sql at 6, 12 and 28 planes (28 = the web-scale width);
+    trained-IVF lists (broadcast centroid join, plan size O(1) in k)
+    against a numpy int64 argmin over the same centroids, first index on
+    ties, at k=16 and k=256; a null embedding gets a null list."""
     from mfdedup_spark.annops import (
         QUANT,
-        ann_ivf_topk_trained,
-        embedding_neardup_pairs_capped,
         ivf_lists_trained,
         ivf_train,
         recommended_planes,
         srp_bucket,
         srp_bucket_sql,
     )
-    from mfdedup_spark.contract import _embedding_neardup_capped_sql
-    from tests.test_contract import SF
 
-    path = f"{SF}/embeddings.parquet"
+    path, con = emb_duck
     emb = spark.read.parquet(path)
-    con = duckdb.connect()
-    con.sql(f"create view embeddings as select * from '{path}'")
 
     assert recommended_planes(10**12) == 28
     for n in (6, 12, 28):
@@ -272,6 +277,7 @@ def test_ann_assigners_match_reference(spark):
         )
         assert got == want, f"{n} planes"
         assert len(set(got.values())) > 1
+        assert all(0 <= b < (1 << n) for b in got.values())
 
     pdf = emb.toPandas()
     qv = np.floor(
@@ -292,16 +298,50 @@ def test_ann_assigners_match_reference(spark):
     )
     assert ivf_lists_trained(null_vec, centroids=cent).first()["list_id"] is None
 
+
+def test_ann_ivf_joined_parity(spark, emb_duck):
+    """The IVF top-k (assignment and probe selection through the
+    broadcast centroid table) matches its DuckDB oracle at the contract
+    knobs (k=16, nprobe=2) when handed centroids trained once, and runs
+    at k=256."""
+    from mfdedup_spark.annops import ann_ivf_topk_trained, ivf_train
+    from mfdedup_spark.contract import _ann_ivf_trained_sql
+
+    path, con = emb_duck
+    emb = spark.read.parquet(path)
+    cent16 = ivf_train(emb, k=16)
+    got = sorted(
+        (r["query_id"], r["neighbor_id"], r["rank"], r["cosine"])
+        for r in ann_ivf_topk_trained(
+            emb, n_queries=10, topk=5, nprobe=2, centroids=cent16
+        ).collect()
+    )
+    want = sorted(con.sql(_ann_ivf_trained_sql(2)).fetchall())
+    assert got and [g[:3] for g in got] == [w[:3] for w in want]
+    assert np.allclose([g[3] for g in got], [w[3] for w in want], rtol=0, atol=1e-9)
+
+    cent256 = ivf_train(emb, k=256)
     big = ann_ivf_topk_trained(
-        emb, n_queries=5, topk=3, centroids=cent
+        emb, n_queries=5, topk=3, centroids=cent256
     ).collect()
     assert big and {r["query_id"] for r in big} <= set(range(5))
     assert all(1 <= r["rank"] <= 3 for r in big)
 
-    pairs, _ = embedding_neardup_pairs_capped(emb, 0.1, n_planes=12)
+
+def test_embedding_capped_planes_parity(spark, emb_duck):
+    """The production near-dup path threads a corpus-proportional plane
+    count: at 12 planes its capped pairs equal the DuckDB oracle that
+    buckets through srp_bucket_sql at the same width."""
+    from mfdedup_spark.annops import embedding_neardup_pairs_capped
+    from mfdedup_spark.contract import _embedding_neardup_capped_sql
+
+    path, con = emb_duck
+    emb = spark.read.parquet(path)
+    pairs, log = embedding_neardup_pairs_capped(emb, 0.1, n_planes=12)
     got = sorted(map(tuple, pairs.collect()))
     want = sorted(con.sql(_embedding_neardup_capped_sql(12, 0.1)).fetchall())
     assert got and got == want
+    assert log.count() >= 0  # the drop log executes end-to-end
 
 
 def test_ivf_train_once_api(spark):
