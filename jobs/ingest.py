@@ -40,9 +40,6 @@ def main() -> None:
     ap.add_argument("--warehouse", default="/tmp/mfdedup_warehouse")
     ap.add_argument("--fidelity", default="sampled", choices=["sampled", "full"])
     ap.add_argument("--shuffle-partitions", type=int, default=None)
-    ap.add_argument("--profile-stages", action="store_true",
-                    help="after the timed e2e, run an instrumented pass "
-                    "attributing wall time per pipeline stage")
     ap.add_argument("--stage-metrics", action="store_true",
                     help="report per-stage input/shuffle byte volumes for "
                     "the timed section from the driver's status REST API "
@@ -118,53 +115,6 @@ def main() -> None:
         res = dedup_images(df, sig_cfg)
         res["clusters"].write.format("noop").mode("overwrite").save()
         res["signatures"].unpersist()
-
-    def profile_dedup(df) -> dict:
-        """Separate instrumented pass (NOT the timed e2e): forces each
-        pipeline stage behind a persist+count barrier to attribute wall
-        time per stage — the getStatistics() analogue (main.cpp:151-155).
-        Barriers serialize branches, so the stage sum exceeds the true
-        pipelined e2e wall; use it for WHERE the time goes, not totals."""
-        from mfdedup_spark.functions.signatures import compute_signatures
-        from mfdedup_spark.operators.caption_match import caption_pairs
-        from mfdedup_spark.operators.connected_components import (
-            connected_components,
-        )
-        from mfdedup_spark.operators.lsh import candidate_pairs
-        from mfdedup_spark.operators.verify import verify_pairs
-
-        stages: dict = {}
-
-        def mark(name, t0):
-            t = time.time()
-            stages[name] = round(t - t0, 2)
-            return t
-
-        t = time.time()
-        sig = compute_signatures(df, sig_cfg).persist()
-        sig.count()
-        t = mark("signatures", t)
-        cand, _ = candidate_pairs(sig, sig_cfg)
-        cand = cand.persist()
-        cand.count()
-        t = mark("lsh_candidates", t)
-        verified = verify_pairs(cand, sig, sig_cfg).persist()
-        verified.count()
-        t = mark("verify", t)
-        cpairs, _ = caption_pairs(df, sig_cfg)
-        cpairs = cpairs.persist()
-        cpairs.count()
-        t = mark("caption_sa", t)
-        edges = (
-            verified.select("image_id_a", "image_id_b")
-            .unionByName(cpairs.select("image_id_a", "image_id_b"))
-        )
-        clusters = connected_components(edges, sig.select("image_id"))
-        clusters.write.format("noop").mode("overwrite").save()
-        t = mark("connected_components", t)
-        for fr in (sig, cand, verified, cpairs):
-            fr.unpersist()
-        return stages
 
     # steady-state measurement (identical at every parallelism level, like
     # cluster warmup): a full-file byte scan warms the OS page cache, and
@@ -243,7 +193,6 @@ def main() -> None:
         {s["stageId"] for s in fetch_stages(spark)} if args.stage_metrics else set()
     )
 
-    stage_timings: dict = {}
     t0 = time.time()
     if args.mode == "signatures":
         run_signatures()
@@ -264,10 +213,6 @@ def main() -> None:
         n = restore_stats["rows"]  # throughput = restored rows/sec
 
     dt = time.time() - t0
-    if args.mode == "dedup" and args.profile_stages:
-        # after the timed e2e: one instrumented pass for the per-stage
-        # attribution (barriers serialize branches — never in the timing)
-        stage_timings = profile_dedup(images)
     result = {
         "mode": args.mode,
         "fidelity": args.fidelity,
@@ -276,8 +221,6 @@ def main() -> None:
         "time_sec": round(dt, 2),
         "images_per_sec": round(n / dt, 1),
     }
-    if stage_timings:
-        result["stages"] = stage_timings
     if args.stage_metrics:
         # byte-level account of the TIMED section only (stages that
         # started before t0 — setup, warmup, cache-warm scans — are

@@ -55,7 +55,6 @@ class SignatureConfig:
     num_perms: int = 64         # MinHash permutations
     lsh_bands: int = 8          # 8 bands ×
     lsh_rows: int = 8           # 8 rows  = 64 components
-    simhash_bits: int = 64
     simhash_bands: int = 4      # 4 × 16-bit blocking bands for SimHash
     minhash_jaccard_threshold: float = 0.5
     simhash_hamming_threshold: int = 6
@@ -87,4 +86,3 @@ class EngineConfig:
     warehouse: str = "/tmp/mfdedup_spark_warehouse"
     retention: int = 2          # versions kept (build/config.toml:5)
     signature: SignatureConfig = field(default_factory=SignatureConfig)
-    arrow_batch_size: int = 2048

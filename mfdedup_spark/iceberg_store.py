@@ -101,19 +101,6 @@ def delete_partition_dml(table_fqn: str, key: str, value: int) -> str:
     return f"DELETE FROM {table_fqn} WHERE {key} = {int(value)}"
 
 
-def roll_fp_index_sql(prev_fqn: str, staging_fqn: str) -> list[str]:
-    """tableRolling (MetadataManager.h:115-122) on Iceberg: promote the
-    staged index in one atomic replace, then drop the staging table —
-    the same stage-then-roll visibility order as DedupStore's directory
-    rename (ADVICE r04: the old no-op roll made a new index visible
-    before any roll)."""
-    return [
-        f"CREATE OR REPLACE TABLE {prev_fqn} USING iceberg "
-        f"AS SELECT * FROM {staging_fqn}",
-        f"DROP TABLE IF EXISTS {staging_fqn}",
-    ]
-
-
 class IcebergStore:
     """DedupStore's contract against a real Iceberg catalog.
 
@@ -328,35 +315,3 @@ class IcebergStore:
     def read_stage_partition(self, table: str, key: str, value) -> None:
         """No crashed stages can exist under snapshot commits."""
         return None
-
-    # fp_index generation helpers — the SAME stage-then-roll visibility
-    # order as DedupStore (ADVICE r04: the old implementation wrote
-    # fp_index_prev directly with roll a no-op, so a new index became
-    # visible before any roll): write_fp_index stages into
-    # ``fp_index_<generation>_staging``; roll_fp_index promotes it to
-    # ``fp_index_prev`` in one atomic CREATE OR REPLACE commit
-    def write_fp_index(self, df: DataFrame, generation: str = "next") -> None:
-        df.writeTo(self._tbl(f"fp_index_{generation}_staging")).createOrReplace()
-
-    def roll_fp_index(self) -> None:
-        # fail fast on a bare roll (ADVICE r05 low): the two statements
-        # are not atomic, so a crash between them leaves a stale staging
-        # table behind; a later roll without an intervening
-        # write_fp_index must not silently re-promote that stale snapshot
-        # — DedupStore's os.replace raises in the same case
-        if not self.exists("fp_index_next_staging"):
-            raise FileNotFoundError(
-                "roll_fp_index: fp_index_next_staging does not exist "
-                "(no write_fp_index since the last roll)"
-            )
-        for stmt in roll_fp_index_sql(
-            self._tbl("fp_index_prev"), self._tbl("fp_index_next_staging")
-        ):
-            self.spark.sql(stmt)
-
-    def read_fp_index(self) -> DataFrame | None:
-        return (
-            self.read_table("fp_index_prev")
-            if self.exists("fp_index_prev")
-            else None
-        )

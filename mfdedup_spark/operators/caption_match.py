@@ -14,7 +14,7 @@ Dataflow:
    *all* of its word k-grams with the host, so any shared-gram bucket is a
    complete blocking scheme for whole-word-aligned substrings.
 2. Candidate pairs — the same salted/capped anchor-star generator as the
-   MinHash LSH path (operators/lsh.anchor_star_pairs).
+   MinHash LSH path (operators/lsh.capped_pairs).
 3. Verification — per-anchor suffix-array groups: rows are repartitioned
    by anchor and processed by ``mapInPandas`` with a pandas groupby
    inside each Arrow batch (same semantics as applyInPandas-per-group,
@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from mfdedup_spark.config import SignatureConfig
-from mfdedup_spark.operators.lsh import anchor_star_pairs
+from mfdedup_spark.operators.lsh import capped_pairs
 
 PAIR_SCHEMA = T.StructType(
     [
@@ -98,8 +98,9 @@ def caption_pairs(
     buckets = caption_gram_buckets(
         images, cfg, max_grams_per_caption=cfg.caption_max_grams
     )
-    cand, stats = anchor_star_pairs(
-        buckets, cfg, key_cols=["bucket"], id_col="image_id", pin=pin
+    cand, stats = capped_pairs(
+        buckets, cfg.bucket_cap, cfg.salt_buckets, key_cols=["bucket"],
+        id_col="image_id", pin=pin,
     )
     caps = images.select("image_id", "caption")
     joined = (

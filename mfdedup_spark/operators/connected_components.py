@@ -17,7 +17,9 @@ Two exact paths, chosen by the size of the edge list:
    graph follows *DISC* (ICDE 2021).
 2. **Loop** (more edges than the driver may hold; the 100 TB path):
    star contraction plus an iterative DataFrame self-join with a
-   checkpointed frontier, described below.
+   checkpointed frontier, described below. It reads the edge partitions
+   the bounded collect already computed (both paths collect through a
+   lazy local checkpoint), so the pair subtree runs once on either path.
 
 The loop exploits the graft's graph shape: the graphs are UNIONS OF
 ANCHOR-STARS (every capped bucket emits anchor→member edges), so almost
@@ -80,6 +82,11 @@ log = logging.getLogger(__name__)
 #: edges count: the cap applies to the rows as given. Above the cap the
 #: Spark loop runs, which no driver bound limits.
 DRIVER_MAX_EDGES = 2_000_000
+
+#: rounds the loop path may take before it raises; each round is two
+#: propagation hops on the contracted graph, whose diameter is ~1-2 on
+#: the graft's anchor-star graphs. The driver path always converges.
+MAX_ITER = 50
 
 
 def _prefetch(df: DataFrame) -> threading.Thread:
@@ -161,7 +168,7 @@ def _with_singletons(
     return labels.unionByName(singletons)
 
 
-def _iterate_min_label(edges: DataFrame, max_iter: int) -> DataFrame:
+def _iterate_min_label(edges: DataFrame) -> DataFrame:
     """Hash-to-min label propagation over (src, dst) edges (both
     directions present; MUST be the contracted graph — see
     _contracted_loop, which is the only caller). Returns
@@ -201,7 +208,7 @@ def _iterate_min_label(edges: DataFrame, max_iter: int) -> DataFrame:
             F.least("src", "_mn").alias("cluster_id"),
         )
     )
-    for _ in range(max_iter):
+    for _ in range(MAX_ITER):
         # two propagation hops per materialization: on the contracted
         # graph per-round cost is dominated by fixed job/stage latency,
         # so batching hops halves the coordination constant. The
@@ -224,25 +231,25 @@ def _iterate_min_label(edges: DataFrame, max_iter: int) -> DataFrame:
             return h2
         h1 = propagate(h2)
     raise RuntimeError(
-        f"connected_components did not converge in {max_iter} iterations "
-        "(contracted-component diameter exceeds max_iter — raise max_iter)"
+        f"connected_components did not converge in {MAX_ITER} iterations "
+        "(contracted-component diameter exceeds MAX_ITER — raise MAX_ITER)"
     )
 
 
-def connected_components(
-    pairs: DataFrame, vertices: DataFrame, max_iter: int = 50
-) -> DataFrame:
+def connected_components(pairs: DataFrame, vertices: DataFrame) -> DataFrame:
     """pairs(image_id_a, image_id_b) + vertices(image_id)
     → clusters(image_id, cluster_id). Singletons keep their own id;
     endpoints missing from ``vertices`` are labelled too, and duplicate
     or reversed pairs change nothing.
 
     Runs Spark jobs when called: the bounded edge collect that picks the
-    path computes the pair subtree. ``max_iter`` bounds the loop path's
-    rounds (the driver path always converges).
+    path computes the pair subtree. The collect reads the edges through
+    a lazy local checkpoint, so it computes every partition once (a
+    collect of a limit evaluates all input partitions) and the loop path
+    reads those partitions instead of computing the subtree again.
     """
-    edges = pairs.select("image_id_a", "image_id_b").limit(DRIVER_MAX_EDGES + 1)
-    table = edges.toArrow()
+    edges = pairs.select("image_id_a", "image_id_b").localCheckpoint(eager=False)
+    table = edges.limit(DRIVER_MAX_EDGES + 1).toArrow()
     # null ids keep the loop's semantics (which labels them) rather
     # than get a rank of their own
     if table.num_rows <= DRIVER_MAX_EDGES and not any(
@@ -250,12 +257,10 @@ def connected_components(
     ):
         labels = pairs.sparkSession.createDataFrame(_driver_labels(table))
         return _with_singletons(labels, labels, vertices)
-    return _contracted_loop(pairs, vertices, max_iter)
+    return _contracted_loop(edges, vertices)
 
 
-def _contracted_loop(
-    pairs: DataFrame, vertices: DataFrame, max_iter: int
-) -> DataFrame:
+def _contracted_loop(pairs: DataFrame, vertices: DataFrame) -> DataFrame:
     """The loop path of ``connected_components`` (module docstring).
 
     Iteration runs over EDGE ENDPOINTS only: vertices with no edges can
@@ -288,8 +293,9 @@ def _contracted_loop(
         )
         .localCheckpoint(eager=False)
     )
-    # overlap: start computing the (expensive) pair subtree behind this
-    # checkpoint now, while the driver plans the contraction fragments
+    # overlap: materialize this checkpoint (a re-read of the partitions
+    # the caller's collect computed) while the driver plans the
+    # contraction fragments
     prefetch = _prefetch(edges)
 
     # stage 1 — star contraction: l1(v) = min({v} ∪ N(v)); feeds both
@@ -330,7 +336,7 @@ def _contracted_loop(
     # lbl1 is already checkpointed and distinct-by-construction (groupBy
     # src), so the former endpoints.distinct() exchange is free (r06,
     # guide §2.4).
-    clab = _iterate_min_label(cedges, max_iter)
+    clab = _iterate_min_label(cedges)
     prefetch.join()
     final = (
         lbl1.join(clab.withColumnRenamed("image_id", "l1"), "l1", "left")

@@ -62,20 +62,6 @@ def explode_bands(signatures: DataFrame) -> DataFrame:
     )
 
 
-def anchor_star_pairs(
-    exploded: DataFrame,
-    cfg: SignatureConfig,
-    key_cols: list[str] = ("space", "band", "bucket"),
-    id_col: str = "image_id",
-    pin: list | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Salted, capped anchor-star pair generator at the engine's
-    SignatureConfig (cap + salt fan-out from config)."""
-    return capped_pairs(
-        exploded, cfg.bucket_cap, cfg.salt_buckets, key_cols, id_col, pin
-    )
-
-
 def capped_pairs(
     exploded: DataFrame,
     cap: int,
@@ -187,4 +173,6 @@ def candidate_pairs(
     signatures: DataFrame, cfg: SignatureConfig, pin: list | None = None
 ) -> tuple[DataFrame, DataFrame]:
     """MinHash-band + SimHash-band candidate pairs (distinct, a < b)."""
-    return anchor_star_pairs(explode_bands(signatures), cfg, pin=pin)
+    return capped_pairs(
+        explode_bands(signatures), cfg.bucket_cap, cfg.salt_buckets, pin=pin
+    )

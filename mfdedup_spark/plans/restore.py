@@ -297,7 +297,6 @@ def restore_version(
     store: DedupStore,
     v: int,
     ordered: bool = False,
-    broadcast_recipes: bool | None = None,
 ) -> tuple[DataFrame, dict]:
     """→ (restored rows, stats incl. read amplification).
 
@@ -313,9 +312,10 @@ def restore_version(
     sorts. Pass ``ordered=True`` only for a single-stream sequential
     sink that cannot seek.
 
-    ``broadcast_recipes`` (default: auto at BROADCAST_RECIPES_MAX_ROWS)
-    picks the join strategy for payload ⋈ offsets:
-    - True  → the placed-recipe map (metadata only) broadcasts to the
+    The join strategy for payload ⋈ offsets is picked from the recipe
+    row count and estimated bytes (BROADCAST_RECIPES_MAX_ROWS,
+    BROADCAST_RECIPES_MAX_BYTES):
+    - within both → the placed-recipe map (metadata only) broadcasts to the
       payload scan: restore becomes scan → hash probe → sink with ZERO
       payload exchanges — the Spark re-expression of the reference's
       in-memory per-node restoreMap, which never moves a chunk between
@@ -323,8 +323,10 @@ def restore_version(
       always-on fp shuffle as ~2/3 of restore wall (15 GB written+read
       for a 17 GB restore) and showed it saturating the single host's
       transport at 1 worker already (BENCH/BASELINE_restore_cluster.md).
-    - False → fp-keyed shuffle join: the 100-TB-safe path when one
-      version's recipe map outgrows executor memory.
+    - beyond either → no broadcast hint: Spark plans the join from its
+      own size estimate, an fp-keyed shuffle join at scale — the
+      100-TB-safe path when one version's recipe map outgrows executor
+      memory.
     """
     manifest = store.read_manifest()
     oldest = manifest.get("oldest_version", 1)
@@ -383,19 +385,18 @@ def restore_version(
         "payloads (store fp-uniqueness invariant violated)"
     )
 
-    if broadcast_recipes is None:
-        # route on estimated BYTES as well as rows (ADVICE r05 medium):
-        # the placed map carries unbounded per-row metadata (caption), so
-        # a caption-heavy corpus could blow past executor memory or
-        # Spark's 8 GB broadcast cap right at the row cap. The estimate
-        # (exact caption payload + fixed per-row overhead for the numeric
-        # columns, ids and row framing) is already computed by the fused
-        # metadata job above — zero extra actions.
-        est_bytes = int(rrow["caption_bytes"] or 0) + n_recipe * BROADCAST_ROW_OVERHEAD
-        broadcast_recipes = (
-            n_recipe <= BROADCAST_RECIPES_MAX_ROWS
-            and est_bytes <= BROADCAST_RECIPES_MAX_BYTES
-        )
+    # route on estimated BYTES as well as rows (ADVICE r05 medium): the
+    # placed map carries unbounded per-row metadata (caption), so a
+    # caption-heavy corpus could blow past executor memory or Spark's
+    # 8 GB broadcast cap right at the row cap. The estimate (exact
+    # caption payload + fixed per-row overhead for the numeric columns,
+    # ids and row framing) is already computed by the fused metadata job
+    # above — zero extra actions.
+    est_bytes = int(rrow["caption_bytes"] or 0) + n_recipe * BROADCAST_ROW_OVERHEAD
+    broadcast_recipes = (
+        n_recipe <= BROADCAST_RECIPES_MAX_ROWS
+        and est_bytes <= BROADCAST_RECIPES_MAX_BYTES
+    )
     placed_side = F.broadcast(placed) if broadcast_recipes else placed
     restored = (
         pool.select("fp", "bytes")

@@ -41,6 +41,9 @@ def get_spark(
         .config("spark.locality.wait", "0")  # local mode: never stall task launch
         .config("spark.local.dir", os.environ.get("SPARK_LOCAL_DIRS", "/dev/shm/spark-local"))
         .config("spark.ui.enabled", "false")
+        # no \r progress frames on stderr: they interleave with a tool's
+        # stdout lines under 2>&1 and break grep over its log
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )
     return b.getOrCreate()

@@ -11,9 +11,10 @@ overwrite (/root/reference/Utility/Manifest.h:14-21).
 Layout under ``warehouse/``:
   manifest.json     {total_version, arrangement_fall_behind}
                     (reference: Utility/Manifest.h:7-10)
-  fp_index_prev/    fps of the previous version — the NDF earlierTable
-                    (MetadataManager.h:39-52); rolled atomically each
-                    ingest (tableRolling, :115-122)
+  fp_index/         version=V/ distinct fps of version V; ingesting V+1
+                    reads only partition V — the NDF earlierTable
+                    (MetadataManager.h:39-52), so tableRolling
+                    (:115-122) is which partition the next ingest reads
   chunk_store/      category=N/ partitions of live unique image records;
                     N = x(x-1)/2+y for first-written y, live-at x
                     (README.md:51-57, ChunkWriterManager.h:30)
@@ -21,6 +22,8 @@ Layout under ``warehouse/``:
                     version is W (ArrangementWritePipeline.h:62-124)
   recipes/          version=V/ ordered (seq_no, image_id, fp) lists
                     (Recipe files, WriteFilePipeline.h:87-100)
+  classification/   version=V/ per-record NDF result (UNIQUE, INTERNAL,
+                    ADJACENT) of version V
   clusters/         version=V/ near-dup cluster assignments (graft output)
   drop_log/         version=V/ hot-bucket overflow log from the capped
                     pair generators (north_rule: logged drops) —
@@ -285,27 +288,6 @@ class DedupStore:
             shutil.rmtree(target)
             return True
         return False
-
-    # ------------------------------------------------------------- fp index
-    def write_fp_index(self, df: DataFrame, generation: str = "next") -> None:
-        """Stage the new index, then swap — tableRolling
-        (MetadataManager.h:115-122) as an atomic directory rename."""
-        staged = self.path(f"fp_index_{generation}_staging")
-        df.write.option(
-            "parquet.block.size", PARQUET_BLOCK_BYTES
-        ).mode("overwrite").parquet(staged)
-
-    def roll_fp_index(self) -> None:
-        prev = self.path("fp_index_prev")
-        staged = self.path("fp_index_next_staging")
-        if os.path.exists(prev):
-            shutil.rmtree(prev)
-        os.replace(staged, prev)
-
-    def read_fp_index(self) -> DataFrame | None:
-        if not self.exists("fp_index_prev"):
-            return None
-        return self.read("fp_index_prev")
 
     # -------------------------------------------------------------- lineage
     def append_lineage(self, rows: list[dict]) -> None:

@@ -133,9 +133,9 @@ def test_streaming_out_of_order_versions(spark, tmp_path):
 
 
 def test_connected_components_raises_on_nonconvergence(spark, monkeypatch):
-    """A component chain longer than max_iter must raise, not silently
-    return unconverged labels (ADVICE r01). A property of the loop path,
-    so the driver path is switched off (it always converges)."""
+    """A component chain longer than MAX_ITER rounds must raise, not
+    silently return unconverged labels (ADVICE r01). A property of the
+    loop path, so the driver path is switched off (it always converges)."""
     from mfdedup_spark.operators import connected_components as cc
     from mfdedup_spark.operators.connected_components import connected_components
 
@@ -149,11 +149,46 @@ def test_connected_components_raises_on_nonconvergence(spark, monkeypatch):
     vertices = spark.createDataFrame(
         [(f"v{i:02d}",) for i in range(n + 1)], "image_id string"
     )
+    monkeypatch.setattr(cc, "MAX_ITER", 3)
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(pairs, vertices, max_iter=3)
+        connected_components(pairs, vertices)
     # with enough iterations the same chain converges to one cluster
-    out = connected_components(pairs, vertices, max_iter=n + 2).collect()
+    monkeypatch.setattr(cc, "MAX_ITER", n + 2)
+    out = connected_components(pairs, vertices).collect()
     assert {r["cluster_id"] for r in out} == {"v00"}
+
+
+def test_connected_components_computes_pairs_once(spark, monkeypatch):
+    """The pair subtree is evaluated once per row on both paths: the
+    loop path reads the partitions the bounded edge collect computed
+    instead of planning the subtree again. The probe sits before a
+    shuffle, so a second evaluation would be a second map stage, not a
+    re-read of shuffle files."""
+    from mfdedup_spark.operators import connected_components as cc
+
+    n = 600
+    seen = spark.sparkContext.accumulator(0)
+
+    @F.udf("string")
+    def probe(x):
+        seen.add(1)
+        return x
+
+    ids = spark.range(n).select(
+        F.format_string("v%04d", "id").alias("id"),
+        F.format_string("v%04d", (F.col("id") / 6).cast("long") * 6).alias("anchor"),
+    )
+    pairs = ids.select(
+        F.col("anchor").alias("image_id_a"), probe("id").alias("image_id_b")
+    ).repartition(4, "image_id_a")
+    vertices = ids.select(F.col("id").alias("image_id"))
+    for cap in (cc.DRIVER_MAX_EDGES, 0):
+        monkeypatch.setattr(cc, "DRIVER_MAX_EDGES", cap)
+        seen.value = 0
+        out = cc.connected_components(pairs, vertices)
+        assert out.count() == n
+        assert out.select("cluster_id").distinct().count() == n // 6
+        assert seen.value == n, f"DRIVER_MAX_EDGES={cap}: {seen.value} evaluations"
 
 
 def test_capped_doc_pairs_subset_and_droplog(spark):
@@ -530,7 +565,6 @@ def test_iceberg_sql_construction():
         delete_partition_dml,
         insert_overwrite_from_view_sql,
         list_partitions_sql,
-        roll_fp_index_sql,
     )
 
     schema = T.StructType(
@@ -565,14 +599,6 @@ def test_iceberg_sql_construction():
     assert delete_partition_dml("mfdedup.dedup.archived", "archive_version", 7) == (
         "DELETE FROM mfdedup.dedup.archived WHERE archive_version = 7"
     )
-    # stage-then-roll (ADVICE r04): promote staging atomically, then drop
-    assert roll_fp_index_sql(
-        "mfdedup.dedup.fp_index_prev", "mfdedup.dedup.fp_index_next_staging"
-    ) == [
-        "CREATE OR REPLACE TABLE mfdedup.dedup.fp_index_prev USING iceberg "
-        "AS SELECT * FROM mfdedup.dedup.fp_index_next_staging",
-        "DROP TABLE IF EXISTS mfdedup.dedup.fp_index_next_staging",
-    ]
 
 
 def test_iceberg_read_manifest_empty_table():
@@ -635,18 +661,3 @@ def test_iterate_min_label_contracted_only():
     assert isinstance(first_arg, ast.Name) and first_arg.id == "cedges", (
         "_iterate_min_label must be fed the CONTRACTED edge set"
     )
-
-
-def test_iceberg_bare_roll_guard():
-    """ADVICE r05 low: roll_fp_index without an intervening
-    write_fp_index must fail fast instead of re-promoting a stale
-    staging snapshot left by a crash between the roll's two
-    (non-atomic) statements."""
-    import pytest as _pytest
-
-    from mfdedup_spark.iceberg_store import IcebergStore
-
-    st = IcebergStore.__new__(IcebergStore)  # skip the jar-gated __init__
-    st.exists = lambda table: False
-    with _pytest.raises(FileNotFoundError, match="fp_index_next_staging"):
-        st.roll_fp_index()

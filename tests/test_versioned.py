@@ -16,6 +16,7 @@ from mfdedup_spark.config import EngineConfig
 from mfdedup_spark.core import codecs
 from mfdedup_spark.fixtures import generate_versioned, write_parquet
 from mfdedup_spark.plans.ingest import ingest_series, ingest_version
+from mfdedup_spark.plans.pipeline import dedup_images
 from mfdedup_spark.plans.restore import restore_version
 from mfdedup_spark.plans.retention import apply_retention
 from mfdedup_spark.store import DedupStore
@@ -116,29 +117,6 @@ def test_restore_correctness(ingested):
         offs = seq["offset"].to_numpy()
         assert offs[0] == 0
         assert np.array_equal(offs[1:], np.cumsum(lens)[:-1])
-
-
-def test_restore_join_route_parity(ingested):
-    """The broadcast-recipes route (zero payload exchanges — the
-    reference's in-memory restoreMap re-expressed) must return exactly
-    the rows of the fp-shuffle route, and its plan must actually carry
-    a broadcast join on the payload side."""
-    store, pdf, _ = ingested
-
-    def rows_of(df):
-        return sorted(
-            (r["seq_no"], r["image_id"], r["offset"], bytes(r["bytes"]),
-             r["caption"])
-            for r in df.collect()
-        )
-
-    for v in (1, 2, 3):
-        r_bc, s_bc = restore_version(store, v, broadcast_recipes=True)
-        r_sh, s_sh = restore_version(store, v, broadcast_recipes=False)
-        assert rows_of(r_bc) == rows_of(r_sh), v
-        assert s_bc["rows"] == s_sh["rows"] == len(pdf[pdf["version"] == v])
-    plan = r_bc._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan, plan
 
 
 def test_read_amplification_after_arrangement(ingested):
@@ -541,6 +519,16 @@ def test_drop_log_persisted(spark, series, tmp_path_factory):
         assert r["kept"] == 4  # == cap on overflow rows
         assert r["space"] in ("mh", "sh", "caption")
 
+    # the persisted log IS the pipeline's bucket_stats: same schema, same
+    # rows as dedup_images over the same input at the same config
+    want = dedup_images(spark.read.parquet(p), cfg.signature)
+    got = log.drop("version")
+    assert [(f.name, f.dataType) for f in got.schema] == [
+        (f.name, f.dataType) for f in want["bucket_stats"].schema
+    ]
+    assert sorted(got.collect()) == sorted(want["bucket_stats"].collect())
+    want["signatures"].unpersist()
+
 
 def test_staged_swap_roll_forward(spark, series, tmp_path_factory):
     """The staged archive swap's own crash window (ADVICE r03 medium):
@@ -773,26 +761,45 @@ def test_restore_prepayload_job_count(ingested):
     )
 
 
-def test_restore_join_route_parity(ingested):
+def test_restore_join_route_parity(ingested, monkeypatch):
     """VERDICT r05 next-round task 4: both payload-join routes — the
     broadcast placed-recipe map and the fp-keyed shuffle join — must
-    restore identical rows (the contract is frozen at 41 entries, so the
-    pin is this equality test)."""
-    store, _, _ = ingested
+    restore identical rows and bytes for every version (the contract is
+    frozen at 41 entries, so the pin is this equality test). The shuffle
+    route is forced with a zero row cap AND no automatic broadcast:
+    under the session's 64 MB threshold Spark would otherwise broadcast
+    the small test recipe map on its own, and the plan checks show each
+    route really ran its join."""
+    from mfdedup_spark.plans import restore as R
+
+    store, pdf, _ = ingested
+    spark = store.spark
     cols = ["seq_no", "image_id", "offset", "w", "h", "fmt", "caption"]
-    bc, bs = restore_version(store, 2, broadcast_recipes=True)
-    sh, ss = restore_version(store, 2, broadcast_recipes=False)
-    a = (
-        bc.withColumn("sha", F.sha1("bytes")).select(*cols, "sha")
-        .toPandas().sort_values(cols).reset_index(drop=True)
-    )
-    b = (
-        sh.withColumn("sha", F.sha1("bytes")).select(*cols, "sha")
-        .toPandas().sort_values(cols).reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(a, b)
-    assert bs["restored_bytes"] == ss["restored_bytes"]
-    assert bs["scanned_bytes"] == ss["scanned_bytes"]
+
+    def run(v):
+        df, stats = R.restore_version(store, v)
+        got = (
+            df.withColumn("sha", F.sha1("bytes")).select(*cols, "sha")
+            .toPandas().sort_values(cols).reset_index(drop=True)
+        )
+        return got, stats, df._jdf.queryExecution().executedPlan().toString()
+
+    default = {v: run(v) for v in (1, 2, 3)}
+    monkeypatch.setattr(R, "BROADCAST_RECIPES_MAX_ROWS", 0)
+    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        forced = {v: run(v) for v in (1, 2, 3)}
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+    for v in (1, 2, 3):
+        (a, bs, bplan), (b, ss, splan) = default[v], forced[v]
+        pd.testing.assert_frame_equal(a, b)
+        assert len(a) == bs["rows"] == len(pdf[pdf["version"] == v])
+        assert bs["restored_bytes"] == ss["restored_bytes"]
+        assert bs["scanned_bytes"] == ss["scanned_bytes"]
+        assert "BroadcastHashJoin" in bplan, bplan
+        assert "SortMergeJoin" in splan, splan
 
 
 def test_broadcast_route_byte_budget(ingested, monkeypatch):

@@ -36,7 +36,7 @@ def build_zip() -> str:
 
 def run_once(
     cpus: int, zpath: str, input_path: str, mode: str, fidelity: str,
-    profile: bool = False, timeout: int = 1200, warehouse: str | None = None,
+    timeout: int = 1200, warehouse: str | None = None,
 ) -> dict:
     cmd = [
         "spark-submit",
@@ -55,8 +55,6 @@ def run_once(
         "--mode", mode,
         "--fidelity", fidelity,
     ]
-    if profile:
-        cmd.append("--profile-stages")
     if warehouse:
         cmd += ["--warehouse", warehouse]
     out = subprocess.run(cmd, capture_output=True, text=True, timeout=timeout)
@@ -113,7 +111,6 @@ def main() -> int:
             s0 = cpu_stat()
             r = run_once(
                 cpus, zpath, input_path, args.mode, args.fidelity,
-                profile=(rep == 0 and args.mode == "dedup"),
                 timeout=args.timeout, warehouse=warehouse,
             )
             s1 = cpu_stat()
@@ -185,36 +182,6 @@ All raw runs (seconds, with host-busy fraction):
                 )
                 + "\n"
             )
-        # per-stage breakdown: which stage flattens when cores quadruple
-        if any("stages" in r for rs in results.values() for r in rs):
-            stage_names = list(
-                next(r for r in results[levels[0]] if "stages" in r)["stages"]
-            )
-            f.write(
-                "\n## Per-stage breakdown (instrumented pass, rep 0; "
-                "barriers serialize branches, so stage sums exceed the "
-                "pipelined e2e wall; stage eff = (T_lo/T_hi)/(hi/lo))"
-                "\n\n| stage | "
-                + " | ".join(f"local[{c}]" for c in levels)
-                + " | stage efficiency |\n|---|"
-                + "---|" * (len(levels) + 1)
-                + "\n"
-            )
-            for sname in stage_names:
-                bests = {
-                    c: min(
-                        r["stages"].get(sname, float("inf"))
-                        for r in rs
-                        if "stages" in r
-                    )
-                    for c, rs in results.items()
-                }
-                seff = (bests[lo] / bests[hi]) / (hi / lo) if bests[hi] else 0
-                f.write(
-                    f"| {sname} | "
-                    + " | ".join(f"{bests[c]:.1f}" for c in levels)
-                    + f" | {seff:.2f} |\n"
-                )
         f.write("""
 Notes:
 - Single-VM substitute for the N→4N executor rule: both levels share one
